@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import threading
 
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
@@ -63,21 +64,38 @@ def track_local_checkpoint(df: DataFrame, slot: str) -> DataFrame:
     already does. Releasing is best-effort: if the JVM handle can't be
     resolved the new checkpoint still works, the old blocks just wait
     for GC as before."""
-    out = df.localCheckpoint(eager=True)
-    try:
-        jrdd = out._jdf.queryExecution().analyzed().rdd()
-    except Exception:
-        jrdd = None
+    return register_checkpoint(df.localCheckpoint(eager=True), slot)
+
+
+def register_checkpoint(out: DataFrame, slot: str) -> DataFrame:
+    """Register the RDD backing the already-checkpointed frame ``out``
+    under ``slot`` and release the blocks of the previous checkpoint
+    registered there — the slot lifecycle of
+    :func:`track_local_checkpoint` for a LAZY ``localCheckpoint``, whose
+    blocks are written by the first action that reads ``out``:
+    registering launches no job. Same contract: consume a call's result
+    before the next same-slot call releases it.
+
+    A previous checkpoint that no action has materialized yet is only
+    dropped from the slot, not released: a caller may build two frames
+    before reading either, and a local checkpoint whose storage level
+    was released before its first job fails an assertion that ends the
+    whole Spark application."""
+    handle = checkpoint_handle(out)
     with _LOCK:
         prev = _CKPT_SLOTS.pop(slot, None)
-        if jrdd is not None:
-            _CKPT_SLOTS[slot] = jrdd
-    if prev is not None:
-        try:
-            prev.unpersist(False)
-        except Exception:
-            pass
+        if handle is not None:
+            _CKPT_SLOTS[slot] = handle
+    if prev is not None and _is_checkpointed(prev):
+        release_handle(prev)
     return out
+
+
+def _is_checkpointed(handle: object) -> bool:
+    try:
+        return bool(handle.isCheckpointed())
+    except Py4JError:
+        return False
 
 
 def release_checkpoint(slot: str) -> bool:
@@ -87,13 +105,8 @@ def release_checkpoint(slot: str) -> bool:
     registered checkpoint was released."""
     with _LOCK:
         prev = _CKPT_SLOTS.pop(slot, None)
-    if prev is None:
-        return False
-    try:
-        prev.unpersist(False)
-    except Exception:
-        pass
-    return True
+    release_handle(prev)
+    return prev is not None
 
 
 def track(df: DataFrame) -> DataFrame:
@@ -159,6 +172,19 @@ def chain_local_checkpoint(df: DataFrame, prev: object | None) -> tuple[DataFram
     return out, handle
 
 
+def _internal_rows(df: DataFrame) -> object | None:
+    """The JVM internal-row RDD behind ``df``, or None when that handle is
+    unavailable (no ``_jdf``, or a py4j error naming the accessor). A job
+    failure — ``toRdd`` runs the query stages of an adaptive plan — is a
+    ``Py4JJavaError`` and propagates."""
+    try:
+        return df._jdf.queryExecution().toRdd()
+    except Py4JJavaError:
+        raise
+    except (Py4JError, AttributeError):
+        return None
+
+
 def materialize_count(df: DataFrame) -> int:
     """Exact row count via the JVM internal-row RDD — ONE job with no
     exchange. ``Dataset.count()`` plans a global aggregate whose final
@@ -171,11 +197,11 @@ def materialize_count(df: DataFrame) -> int:
     partition, persisting the checkpoint blocks as it goes, and the
     end-of-job ``doCheckpoint`` finds none missing — one job where
     eager-checkpoint-then-probe costs two. Falls back to
-    ``Dataset.count()`` if the internal handle is unavailable."""
-    try:
-        return int(df._jdf.queryExecution().toRdd().count())
-    except Exception:
-        return int(df.count())
+    ``Dataset.count()`` only if the internal handle is unavailable; a
+    failing job raises its own error once instead of re-running the
+    scan."""
+    rdd = _internal_rows(df)
+    return int(df.count()) if rdd is None else int(rdd.count())
 
 
 def num_partitions(df: DataFrame) -> int:
@@ -184,10 +210,8 @@ def num_partitions(df: DataFrame) -> int:
     per call — pure driver overhead on deep plans). ``toRdd`` is cached
     on the query execution, so after :func:`materialize_count` this is
     free."""
-    try:
-        return int(df._jdf.queryExecution().toRdd().getNumPartitions())
-    except Exception:
-        return int(df.rdd.getNumPartitions())
+    rdd = _internal_rows(df)
+    return int(df.rdd.getNumPartitions()) if rdd is None else int(rdd.getNumPartitions())
 
 
 def checkpoint_handle(df: DataFrame) -> object | None:

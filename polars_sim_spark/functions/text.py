@@ -50,23 +50,19 @@ def normalize_string_col(s: Column | str) -> Column:
 def trigram_tokens(s: Column | str) -> Column:
     """Distinct in-vocab character trigrams of ``s`` as ``array<string>``.
 
-    Reference ``transform`` (``src/cossim.rs:27-60``) re-expressed as a
-    declarative expression: sliding ``substring`` windows → regex vocab
-    filter → ``array_distinct``. Null / short strings yield an empty array.
+    Reference ``transform`` (``src/cossim.rs:27-60``) re-expressed as one
+    native expression: a zero-width lookahead ``(?=([a-z]{3}))`` matches
+    at every position that starts an in-vocab trigram, so overlapping
+    trigrams come out in position order, then ``array_distinct`` keeps
+    each one's first occurrence. Native and lambda-free: about 2× faster
+    than the same semantics as interpreted ``transform``/``filter``/
+    ``rlike`` lambdas (BASELINE.md). Null / short strings yield an empty
+    array (never null).
     """
-    def body(sv: Column) -> Column:
-        grams = F.transform(
-            F.sequence(F.lit(1), F.length(sv) - F.lit(2)),
-            lambda i: F.substring(sv, i, F.lit(3)),
-        )
-        toks = F.array_distinct(F.filter(grams, lambda g: g.rlike("^[a-z]{3}$")))
-        empty = F.array().cast("array<string>")
-        return F.when(F.length(sv) >= F.lit(3), toks).otherwise(empty)
-
-    # let-bound: callers pass computed strings (the word-normalized path
-    # lower+regexp_replace's the key) and inlining would re-run that per
-    # character position.
-    return let_col(_as_col(s), body)
+    toks = F.array_distinct(
+        F.regexp_extract_all(_as_col(s), F.lit("(?=([a-z]{3}))"), 1)
+    )
+    return F.coalesce(toks, F.array().cast("array<string>"))
 
 
 def trigram_id(g: Column) -> Column:

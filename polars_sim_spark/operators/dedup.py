@@ -1960,6 +1960,10 @@ def embedding_ivf_near_dup_pairs(
     within-hot-cell recall is traded — the same trade ``nprobe`` makes,
     one level down. Work per hot cell drops from size² to
     Σ sub² + size·⌈size/cap⌉ (sub-centroid scoring).
+
+    The centroid assignments are a lazy ``localCheckpoint`` registered
+    under the ``"dedup.ivf_assigned"`` slot (``cache.register_checkpoint``):
+    consume a call's result before the next call, which releases it.
     """
     from polars_sim_spark.operators.similarity import (
         _centroid_scores,
@@ -2018,8 +2022,12 @@ def embedding_ivf_near_dup_pairs(
     # path's analysis/codegen blow-up — an A/B with persist() measured
     # 41 jobs / 11.2 s task time (AQE re-plans every InMemoryTableScan
     # reference) vs 17 / 5.8 before and 12 / 4.9 with the checkpoint.
+    # Slot-registered, so back-to-back calls in a long-lived session
+    # release the previous call's blocks instead of waiting for GC.
     if not df.isStreaming:
-        assigned = assigned.localCheckpoint(eager=False)
+        assigned = cache_registry.register_checkpoint(
+            assigned.localCheckpoint(eager=False), "dedup.ivf_assigned"
+        )
     if max_cell_fraction is None:
         a = assigned.select("c_id", F.col("__vid").alias("l_id"))
         b = assigned.select("c_id", F.col("__vid").alias("r_id"))

@@ -26,6 +26,13 @@ declare exactly that and let Catalyst/Tungsten choose the execution:
 
     tokens(L) ⋈_token tokens(R) → groupBy(row,col).count → window top-n
 
+* set-keying (always on): every row carries its trigram-SET key — its
+  distinct trigrams sorted and concatenated. Tokens are exactly three
+  characters, so the key is injective without a hash, and its postings
+  are its 3-character chunks. Sims are computed once per pair of
+  distinct keys and expanded back to rows by joining on the key, so
+  repeated strings and strings that differ only outside the [a-z]³
+  vocabulary never multiply the candidate join;
 * ``strategy="broadcast"``: the right side's token postings are broadcast
   (the analog of the reference holding all of B in memory per thread,
   ``src/cossim.rs:277``) — no shuffle of the big left side at all.
@@ -34,8 +41,10 @@ declare exactly that and let Catalyst/Tungsten choose the execution:
   single-machine memory bound (the reference's dense accumulator is
   O(|B|) per thread; we have no such bound).
 * ``strategy="auto"``: like the reference's ``threading_dimension="auto"``
-  heuristic (``join.py:107-114``) we pick by size: broadcast when the
-  right side is small enough.
+  heuristic (``join.py:107-114``) we pick by size, at plan time: broadcast
+  when the optimizer's size estimate of the right input is within the
+  session's ``spark.sql.autoBroadcastJoinThreshold``. No job runs before
+  the caller's action.
 
 Scale notes (100 TB): the trigram vocabulary is only 26³ = 17,576, so
 ultra-frequent tokens create join fan-out skew. Mitigations built in:
@@ -54,25 +63,12 @@ from pyspark.sql import functions as F
 
 from polars_sim_spark import cache as cache_registry
 from polars_sim_spark.functions.text import normalize_string_col, trigram_tokens
+from polars_sim_spark.operators.skew import cpu_floor_repartition
 
 _ROW = "__pss_row"
 _COL = "__pss_col"
-
-#: Auto-strategy: broadcast the right postings when the right side has at
-#: most this many rows (each row expands to ~|tokens| posting entries;
-#: mirrors the reference's auto heuristic role at ``join.py:107-114``).
-#: MEASURED, not assumed (tools/bench_crossover.py, BASELINE.md): the
-#: broadcast build is a single-threaded driver collect+build that grows
-#: with the posting count — past ~250k right rows the shuffle path
-#: reliably wins (2× at 1M) and is far less variance-prone, so the
-#: cutoff sits at the measured break-even.
-BROADCAST_RIGHT_MAX_ROWS = 250_000
-
-#: Strings tokenized per side when probing whether token sets collapse
-#: distinct strings (the set-keyed fast path). Bounded so the probe cost
-#: is O(1) in corpus size; a collapse invisible in a 20k sample is too
-#: rare to pay full-corpus tokenization for up front.
-SET_KEY_SAMPLE_ROWS = 20_000
+_LKEY = "__pss_lkey"
+_RKEY = "__pss_rkey"
 
 
 def _tokens_long(
@@ -142,9 +138,7 @@ def build_idf_weights(
 
     Document frequency is counted over the corpus's DISTINCT (normalized,
     when ``apply_word_normalization``) key strings with a nonzero trigram
-    set — the same collapse-invariant granularity the distinct-key
-    similarity pass evaluates at, so repeated rows never inflate a
-    token's weight. Returns ``(weights, n_docs, default_w2)``:
+    set, so repeated rows never inflate a token's weight. Returns ``(weights, n_docs, default_w2)``:
     ``weights`` has columns ``(__token, __w2)`` where ``__w2`` is the
     SQUARED micro-unit weight (the only form the pipeline consumes:
     binary TF over distinct trigrams makes every dot-product term
@@ -153,29 +147,269 @@ def build_idf_weights(
 
     Scale: the weight table is bounded by the 26³=17,576-token vocabulary
     regardless of corpus size — always broadcastable; the df aggregation
-    is one map-side-combining pass over distinct corpus strings.
+    is one map-side-combining pass over distinct corpus strings. The
+    document count is this function's only job: an RDD ``distinct`` runs
+    both of its stages in ONE job, where a Dataset distinct + count
+    under AQE costs a job per query stage.
     """
     s: Column = F.col(on)
     if apply_word_normalization:
         s = normalize_string_col(s)
-    strs = (
-        corpus.select(s.alias("__s"))
-        .where(F.col("__s").isNotNull())
-        .distinct()
-        .select(trigram_tokens(F.col("__s")).alias("__toks"))
-        .where(F.size("__toks") > 0)
-    )
-    strs = cache_registry.track(strs)  # referenced by the count AND the df agg
-    n_docs = strs.count()
+    docs = corpus.select(s.alias("__s")).where(F.size(trigram_tokens(F.col("__s"))) > 0)
+    n_docs = int(docs._jdf.javaRDD().distinct().count())
     w = _idf_micro_expr(n_docs, F.col("__df"))
     weights = (
-        strs.select(F.explode("__toks").alias("__token"))
+        docs.distinct()
+        .select(F.explode(trigram_tokens(F.col("__s"))).alias("__token"))
         .groupBy("__token")
         .agg(F.count(F.lit(1)).alias("__df"))
         .select("__token", (w * w).alias("__w2"))
     )
     w0 = idf_micro_weight(n_docs, 0)
     return weights, n_docs, w0 * w0
+
+
+def _resolve_plan(
+    right: DataFrame,
+    right_on: str,
+    *,
+    top_n: int,
+    normalization: str,
+    apply_word_normalization: bool,
+    strategy: str,
+    weighting: str,
+    idf_corpus: DataFrame | None,
+    idf_on: str | None,
+) -> tuple[str, tuple[DataFrame, int] | None]:
+    """Validate the similarity options and resolve them into the plan's
+    physical strategy and (for ``weighting="tfidf"``) the fitted
+    ``(weights, default_w2)``. ``"auto"`` is decided here, at plan time:
+    broadcast when the optimizer's size estimate of ``right`` is within
+    the session's ``spark.sql.autoBroadcastJoinThreshold`` — the
+    threshold the session already trusts for its own joins, so no
+    constant of ours and no scout job decides it."""
+    if normalization not in ("l2", "count"):
+        raise ValueError(f"normalization must be 'l2' or 'count', got {normalization!r}")
+    if strategy not in ("auto", "broadcast", "shuffle", "kernel"):
+        raise ValueError(
+            f"strategy must be 'auto', 'broadcast', 'shuffle' or 'kernel', got {strategy!r}"
+        )
+    if top_n < 1:
+        raise ValueError("top_n must be >= 1")
+    if weighting not in ("binary", "tfidf"):
+        raise ValueError(f"weighting must be 'binary' or 'tfidf', got {weighting!r}")
+    if weighting == "binary" and idf_corpus is not None:
+        raise ValueError("idf_corpus only applies with weighting='tfidf'")
+    idf = None
+    if weighting == "tfidf":
+        if strategy == "kernel":
+            raise ValueError(
+                "strategy='kernel' (the broadcast dense-accumulator twin of the "
+                "reference's binary-weight SpGEMM) supports weighting='binary' only"
+            )
+        # Fit the IDF table ONCE, from the original corpus (default: the
+        # right side's key strings). Cached: both sides' posting joins
+        # read it.
+        corpus, ccol = (
+            (idf_corpus, idf_on if idf_on is not None else right_on)
+            if idf_corpus is not None
+            else (right, right_on)
+        )
+        if ccol not in corpus.columns:
+            raise ValueError(f"idf corpus column {ccol!r} not in corpus frame")
+        weights, _, w0_sq = build_idf_weights(
+            corpus, ccol, apply_word_normalization=apply_word_normalization
+        )
+        idf = (cache_registry.track(weights), w0_sq)
+    if strategy == "auto":
+        jss = right.sparkSession._jsparkSession
+        threshold = int(jss.sessionState().conf().autoBroadcastJoinThreshold())
+        size = int(right._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        strategy = "broadcast" if size <= threshold else "shuffle"
+    return strategy, idf
+
+
+def _set_key(s: Column, apply_word_normalization: bool) -> Column:
+    """A string's trigram-SET key: its distinct in-vocab trigrams, sorted
+    and concatenated ('' when it has none). Every token is exactly three
+    ``[a-z]`` characters, so the key is injective on sets with no hash,
+    and its postings are recovered as its 3-character chunks."""
+    if apply_word_normalization:
+        s = normalize_string_col(s)
+    return F.array_join(F.sort_array(trigram_tokens(s)), "")
+
+
+def _key_postings(keyed: DataFrame, key: str, n_tok_name: str) -> DataFrame:
+    """Distinct set keys of ``keyed`` → posting list (key, n_tok, token).
+
+    The keys are hash-repartitioned to an explicit CPU-floor width before
+    the ``distinct`` (skew.cpu_floor_repartition): AQE would otherwise
+    byte-coalesce a few thousand short keys onto one task, and every
+    stage downstream of the postings — on the broadcast path the token
+    join, the pair count and the set-level top-n, all clustered by the
+    left key — would inherit that width."""
+    keys = cpu_floor_repartition(keyed.select(key), key).distinct()
+    return keys.select(
+        key,
+        (F.length(key) / F.lit(3)).cast("int").alias(n_tok_name),
+        F.explode(F.regexp_extract_all(F.col(key), F.lit("([a-z]{3})"), 1)).alias("__token"),
+    )
+
+
+def _scored_pairs(
+    lt: DataFrame,
+    rt: DataFrame,
+    lid: str,
+    rid: str,
+    *,
+    normalization: str,
+    strategy: str,
+    max_token_df: int | None,
+    idf: tuple[DataFrame, int] | None,
+) -> DataFrame:
+    """Postings ``(lid, __nl, __token)`` ⋈ ``(rid, __nr, __token)`` →
+    ``(lid, rid, sim)`` for every pair sharing a (kept) token."""
+    rt_full = rt
+    if max_token_df is not None:
+        # Prune ultra-frequent tokens on the right side (skew guard). A
+        # token's document frequency is its number of right posting
+        # owners: distinct right trigram SETS on the set-keyed path,
+        # right rows under dedup_keys=False. Norms stay FULL on both
+        # weightings (`__nr` is counted over the unpruned set, and the
+        # tfidf branch computes `__nr2` from rt_full) — pruning only
+        # removes overlap terms, so a doc containing a hot token keeps
+        # its true norm and its sims can only shrink, never inflate.
+        hot = (
+            rt.groupBy("__token")
+            .agg(F.count(F.lit(1)).alias("__df"))
+            .where(F.col("__df") > max_token_df)
+            .select("__token")
+        )
+        rt = rt.join(F.broadcast(hot), "__token", "left_anti")
+
+    if idf is not None:
+        # TF-IDF weighting (the reference's declared roadmap,
+        # src/cossim.rs:45-48): each distinct trigram carries weight
+        # idf(t) in exact micro-units, so a dot-product term is the
+        # exact int64 idf(t)² and norms are exact int64 sums — the
+        # similarity stays a deterministic (oracle-reproducible)
+        # function of the corpus. The weight table is vocabulary-bounded
+        # (≤ 26³ rows), hence always a broadcast join onto postings.
+        weights, w0_sq = idf
+        wb = F.broadcast(weights)
+
+        def weighted(t: DataFrame, id_col: str) -> DataFrame:
+            return t.join(wb, "__token", "left").select(
+                id_col, "__token", F.coalesce("__w2", F.lit(w0_sq)).alias("__w2")
+            )
+
+        ltw, rtw = weighted(lt, lid), weighted(rt, rid)
+        # Norms per id over each side's UNPRUNED postings (map-side-
+        # combining aggs — skew-safe, no window).
+        rtw_full = rtw if rt_full is rt else weighted(rt_full, rid)
+        nl2 = ltw.groupBy(lid).agg(F.sum("__w2").alias("__nl2"))
+        nr2 = rtw_full.groupBy(rid).agg(F.sum("__w2").alias("__nr2"))
+        rtw_side = rtw.select(rid, "__token")
+        if strategy == "broadcast":
+            rtw_side = F.broadcast(rtw_side)
+            nr2 = F.broadcast(nr2)
+        # __w2 rides on the LEFT posting; the matched right token is the
+        # same trigram, so each pair term is idf(t)² counted once.
+        pairs = (
+            ltw.join(rtw_side, "__token")
+            .groupBy(lid, rid)
+            .agg(F.sum("__w2").alias("__dot"))
+            .join(nl2, lid)
+            .join(nr2, rid)
+        )
+        if normalization == "l2":
+            # Exact ints → one double division/multiply/sqrt each: IEEE-
+            # deterministic, identical in the oracle.
+            sim = F.col("__dot") / (F.sqrt(F.col("__nl2")) * F.sqrt(F.col("__nr2")))
+        else:
+            # Weighted overlap in natural idf units (micro² → unit).
+            sim = F.col("__dot") / F.lit(float(IDF_MICRO) ** 2)
+    else:
+        rt_side = F.broadcast(rt) if strategy == "broadcast" else rt
+        # Binary weights ⇒ the sparse dot product (src/cossim.rs:88-108)
+        # is a plain overlap count per (row, col) pair.
+        pairs = (
+            lt.join(rt_side, "__token")
+            .groupBy(lid, rid)
+            .agg(
+                F.count(F.lit(1)).alias("__overlap"),
+                F.first("__nl").alias("__nl"),
+                F.first("__nr").alias("__nr"),
+            )
+        )
+        if normalization == "l2":
+            # L2 row-normalization (src/csr.rs:194-210) folded into one
+            # final multiply: with binary weights ‖x‖₂ = √|T(x)|.
+            sim = F.col("__overlap") / (F.sqrt(F.col("__nl")) * F.sqrt(F.col("__nr")))
+        else:
+            sim = F.col("__overlap").cast("double")
+    return pairs.select(lid, rid, sim.alias("sim"))
+
+
+def _top_n(scored: DataFrame, part: str, order: list[Column], top_n: int, rankf) -> DataFrame:
+    """Per-``part`` top-n; Catalyst rewrites ``rank <= k`` into a
+    WindowGroupLimit (partial top-k before the sort — the analog of the
+    reference's partial→final merge in csr.rs:213-269)."""
+    w = Window.partitionBy(part).orderBy(*order)
+    return scored.withColumn("__rn", rankf().over(w)).where(F.col("__rn") <= top_n).drop("__rn")
+
+
+def _keyed_topn(
+    left: DataFrame,
+    right: DataFrame,
+    *,
+    left_on: str,
+    right_on: str,
+    left_id: str,
+    right_id: str,
+    top_n: int,
+    apply_word_normalization: bool,
+    **score,
+) -> DataFrame:
+    """Set-keyed top-n similarity rows (exact): every column of ``left``
+    and ``right`` plus ``sim``, ``top_n`` right rows per left row.
+
+    Two strings with the same trigram set have identical similarity
+    vectors, so sims are computed once per pair of distinct trigram
+    SETS — a grouping never larger than distinct strings, and orders of
+    magnitude smaller on keys that collapse under tokenization (names
+    differing only in digits/punctuation, which the [a-z]³ vocabulary
+    drops).
+
+    1. every row carries its set key (:func:`_set_key`, computed once);
+    2. postings come from each side's distinct keys
+       (:func:`_key_postings`) — representatives are never re-tokenized;
+    3. per left set keep ``rank() <= top_n`` by sim DESC (rank, not
+       row_number: boundary ties must survive because the row-level
+       tiebreak crosses sets that share a sim);
+    4. expand the kept set pairs to right rows by joining on the right
+       key, and take the true row-level top-n per left set (sim DESC,
+       right_id ASC);
+    5. expand to left rows by joining on the left key.
+
+    The expansion joins carry the rows' other columns, so
+    :func:`join_sim` needs no separate id join-back; through
+    :func:`similarity_mapping` only the ids survive column pruning.
+    """
+    lk = left.withColumn(_LKEY, _set_key(F.col(left_on), apply_word_normalization))
+    rk = right.withColumn(_RKEY, _set_key(F.col(right_on), apply_word_normalization))
+    sets = _scored_pairs(
+        _key_postings(lk, _LKEY, "__nl"), _key_postings(rk, _RKEY, "__nr"), _LKEY, _RKEY, **score
+    )
+    sets = _top_n(sets, _LKEY, [F.desc("sim")], top_n, F.rank)
+    per_set = _top_n(
+        sets.join(rk, _RKEY).drop(_RKEY),
+        _LKEY,
+        [F.desc("sim"), F.asc(right_id)],
+        top_n,
+        F.row_number,
+    )
+    return per_set.join(lk, _LKEY).drop(_LKEY)
 
 
 def similarity_mapping(
@@ -195,8 +429,6 @@ def similarity_mapping(
     weighting: str = "binary",
     idf_corpus: DataFrame | None = None,
     idf_on: str | None = None,
-    _rank_ties: bool = False,
-    _idf: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
     """Compute the (row, col, sim) mapping table — the Spark equivalent of
     the reference kernel's COO output (``src/cossim.rs:203-262``).
@@ -205,57 +437,38 @@ def similarity_mapping(
     ``right_id``. Returns columns: ``left_id``, ``right_id``, ``sim``
     (double).
 
-    ``dedup_keys=True`` (default) computes similarities over DISTINCT key
-    strings and expands back to rows afterwards — an exact optimization
-    (identical strings have identical token sets) that collapses the
-    quadratic token-join fan-out when keys repeat. On high-duplication
-    data this is the difference between O(|distinct|²·sel) and O(|rows|²·
-    sel) intermediate pairs; on all-unique data it costs one cheap
-    pre-aggregation. Standard practice in set-similarity-join literature;
-    the reference has no such step (it recomputes per row).
+    ``dedup_keys=True`` (default) computes similarities once per pair of
+    distinct trigram SETS and expands back to rows afterwards — exact
+    (strings with one trigram set have identical similarity vectors),
+    and it collapses the quadratic token-join fan-out when keys repeat.
+    ``dedup_keys=False`` evaluates every row pair directly: the twin of
+    :func:`similarity_mapping_against_postings`.
+
+    ``max_token_df`` drops from the overlap every token whose right-side
+    document frequency exceeds it. The frequency counts distinct right
+    trigram sets (right rows under ``dedup_keys=False``), so repeated
+    right strings never push a token over the cutoff.
+
+    No Spark job runs before the caller's action, except the IDF fit's
+    document count under ``weighting="tfidf"`` and the driver-side index
+    build of ``strategy="kernel"``.
     """
-    if normalization not in ("l2", "count"):
-        raise ValueError(f"normalization must be 'l2' or 'count', got {normalization!r}")
-    if strategy not in ("auto", "broadcast", "shuffle", "kernel"):
-        raise ValueError(
-            f"strategy must be 'auto', 'broadcast', 'shuffle' or 'kernel', got {strategy!r}"
-        )
-    if top_n < 1:
-        raise ValueError("top_n must be >= 1")
     if left_id == right_id:
         raise ValueError(
             f"left_id and right_id must be distinct column names (both {left_id!r}); "
             "alias one side first, or use join_sim() which handles the rename"
         )
-    if weighting not in ("binary", "tfidf"):
-        raise ValueError(f"weighting must be 'binary' or 'tfidf', got {weighting!r}")
-    if weighting == "binary" and idf_corpus is not None:
-        raise ValueError("idf_corpus only applies with weighting='tfidf'")
-    if weighting == "tfidf":
-        if strategy == "kernel":
-            raise ValueError(
-                "strategy='kernel' (the broadcast dense-accumulator twin of the "
-                "reference's binary-weight SpGEMM) supports weighting='binary' only"
-            )
-        if _idf is None:
-            # Fit the IDF table ONCE, from the original corpus (default:
-            # the right side's key strings), BEFORE any distinct-key
-            # collapse — representatives must not distort document
-            # frequencies. Cached: both sides' posting joins read it.
-            corpus, ccol = (
-                (idf_corpus, idf_on if idf_on is not None else right_on)
-                if idf_corpus is not None
-                else (right, right_on)
-            )
-            if ccol not in corpus.columns:
-                raise ValueError(f"idf corpus column {ccol!r} not in corpus frame")
-            weights, _, w0_sq = build_idf_weights(
-                corpus, ccol, apply_word_normalization=apply_word_normalization
-            )
-            _idf = (cache_registry.track(weights), w0_sq)
-    else:
-        _idf = None
-
+    strategy, idf = _resolve_plan(
+        right,
+        right_on,
+        top_n=top_n,
+        normalization=normalization,
+        apply_word_normalization=apply_word_normalization,
+        strategy=strategy,
+        weighting=weighting,
+        idf_corpus=idf_corpus,
+        idf_on=idf_on,
+    )
     if strategy == "kernel":
         # Broadcast dense-accumulator kernel (the reference's physical
         # plan, src/cossim.rs:62-141, as mapInPandas) — see
@@ -274,303 +487,27 @@ def similarity_mapping(
             right_id=right_id,
         )
 
+    score = dict(
+        normalization=normalization, strategy=strategy, max_token_df=max_token_df, idf=idf
+    )
     if dedup_keys:
-        return _similarity_mapping_distinct(
-            left,
-            right,
+        return _keyed_topn(
+            left.select(left_id, left_on),
+            right.select(right_id, right_on),
             left_on=left_on,
             right_on=right_on,
-            top_n=top_n,
-            normalization=normalization,
-            apply_word_normalization=apply_word_normalization,
-            strategy=strategy,
             left_id=left_id,
             right_id=right_id,
-            max_token_df=max_token_df,
-            _idf=_idf,
-        )
+            top_n=top_n,
+            apply_word_normalization=apply_word_normalization,
+            **score,
+        ).select(left_id, right_id, "sim")
 
     lt = _tokens_long(left, left_on, left_id, left_id, apply_word_normalization, "__nl")
     rt = _tokens_long(right, right_on, right_id, right_id, apply_word_normalization, "__nr")
-
-    rt_full = rt
-    if max_token_df is not None:
-        # Prune ultra-frequent tokens on the right side (skew guard).
-        # Norms stay FULL on both weightings: `__nr` was already counted
-        # over the unpruned token set inside _tokens_long, and the tfidf
-        # branch below computes `__nr2` from rt_full — pruning only
-        # removes overlap terms, so a doc containing a hot token keeps
-        # its true norm and its sims can only shrink, never inflate.
-        hot = (
-            rt.groupBy("__token")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .where(F.col("__df") > max_token_df)
-            .select("__token")
-        )
-        rt = rt.join(F.broadcast(hot), "__token", "left_anti")
-
-    if strategy == "auto":
-        # Mirrors the reference's row-count heuristic (join.py:107-114):
-        # pick the physical variant from the size of the right side. The
-        # decision only needs "≤ cutoff or not", never the exact
-        # cardinality, so the scout is a column-pruned LIMIT cutoff+1
-        # count — CollectLimit short-circuits the scan after cutoff+1
-        # rows, keeping this O(cutoff) even on a billion-row right side
-        # (a bare right.count() here was a full O(N) blocking job).
-        bounded = right.select(right_id).limit(BROADCAST_RIGHT_MAX_ROWS + 1).count()
-        strategy = "broadcast" if bounded <= BROADCAST_RIGHT_MAX_ROWS else "shuffle"
-
-    if _idf is not None:
-        # TF-IDF weighting (the reference's declared roadmap,
-        # src/cossim.rs:45-48): each distinct trigram carries weight
-        # idf(t) in exact micro-units, so a dot-product term is the
-        # exact int64 idf(t)² and norms are exact int64 sums — the
-        # similarity stays a deterministic (oracle-reproducible)
-        # function of the corpus. The weight table is vocabulary-bounded
-        # (≤ 26³ rows), hence always a broadcast join onto postings.
-        weights, w0_sq = _idf
-        wb = F.broadcast(weights)
-        ltw = lt.join(wb, "__token", "left").select(
-            left_id, "__token", F.coalesce("__w2", F.lit(w0_sq)).alias("__w2")
-        )
-        rtw = rt.join(wb, "__token", "left").select(
-            right_id, "__token", F.coalesce("__w2", F.lit(w0_sq)).alias("__w2")
-        )
-        # Norms per id (map-side-combining aggs over each side's own
-        # postings — skew-safe, no window). The right norm is computed
-        # over the UNPRUNED postings (rt_full) so max_token_df keeps the
-        # binary path's semantics: prune the overlap, never the norm.
-        rtw_full = (
-            rtw
-            if rt_full is rt
-            else rt_full.join(wb, "__token", "left").select(
-                right_id, F.coalesce("__w2", F.lit(w0_sq)).alias("__w2")
-            )
-        )
-        nl2 = ltw.groupBy(left_id).agg(F.sum("__w2").alias("__nl2"))
-        nr2 = rtw_full.groupBy(right_id).agg(F.sum("__w2").alias("__nr2"))
-        rtw_side = rtw.select(right_id, "__token")
-        if strategy == "broadcast":
-            rtw_side = F.broadcast(rtw_side)
-            nr2 = F.broadcast(nr2)
-        # __w2 rides on the LEFT posting; the matched right token is the
-        # same trigram, so each pair term is idf(t)² counted once.
-        pairs = (
-            ltw.join(rtw_side, "__token")
-            .groupBy(left_id, right_id)
-            .agg(F.sum("__w2").alias("__dot"))
-            .join(nl2, left_id)
-            .join(nr2, right_id)
-        )
-        if normalization == "l2":
-            # Exact ints → one double division/multiply/sqrt each: IEEE-
-            # deterministic, identical in the oracle.
-            sim = F.col("__dot") / (F.sqrt(F.col("__nl2")) * F.sqrt(F.col("__nr2")))
-        else:
-            # Weighted overlap in natural idf units (micro² → unit).
-            sim = F.col("__dot") / F.lit(float(IDF_MICRO) ** 2)
-        scored = pairs.select(left_id, right_id, sim.alias("sim"))
-    else:
-        rt_side = F.broadcast(rt) if strategy == "broadcast" else rt
-
-        # Binary weights ⇒ the sparse dot product (src/cossim.rs:88-108) is a
-        # plain overlap count per (row, col) pair.
-        pairs = (
-            lt.join(rt_side, "__token")
-            .groupBy(left_id, right_id)
-            .agg(
-                F.count(F.lit(1)).alias("__overlap"),
-                F.first("__nl").alias("__nl"),
-                F.first("__nr").alias("__nr"),
-            )
-        )
-
-        if normalization == "l2":
-            # L2 row-normalization (src/csr.rs:194-210) folded into one final
-            # multiply: with binary weights ‖x‖₂ = √|T(x)|.
-            sim = F.col("__overlap") / (F.sqrt(F.col("__nl")) * F.sqrt(F.col("__nr")))
-        else:
-            sim = F.col("__overlap").cast("double")
-
-        scored = pairs.select(left_id, right_id, sim.alias("sim"))
-
-    # Per-left-row top-n (src/cossim.rs:110-133) with deterministic
-    # tiebreak; Catalyst rewrites rank<=k into WindowGroupLimit (partial
-    # top-k before the shuffle — the analog of the reference's
-    # partial→final merge in csr.rs:213-269). With _rank_ties (the
-    # distinct-key pre-pass), boundary ties are kept via rank() so the
-    # later row-level tiebreak sees every candidate string.
-    if _rank_ties:
-        w = Window.partitionBy(left_id).orderBy(F.desc("sim"))
-        rankf = F.rank()
-    else:
-        w = Window.partitionBy(left_id).orderBy(F.desc("sim"), F.asc(right_id))
-        rankf = F.row_number()
-    return (
-        scored.withColumn("__rn", rankf.over(w))
-        .where(F.col("__rn") <= top_n)
-        .drop("__rn")
-    )
-
-
-def _similarity_mapping_distinct(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    left_on: str,
-    right_on: str,
-    top_n: int,
-    normalization: str,
-    apply_word_normalization: bool,
-    strategy: str,
-    left_id: str,
-    right_id: str,
-    max_token_df: int | None,
-    _idf: tuple[DataFrame, int] | None = None,
-) -> DataFrame:
-    """Distinct-TOKEN-SET evaluation of the similarity mapping (exact).
-
-    Two strings with the same trigram set have identical similarity
-    vectors, so sims are computed once per distinct token SET — a
-    strictly coarser (and never larger) grouping than distinct strings.
-    On data whose keys collapse under tokenization (e.g. names differing
-    only in digits/punctuation, which the [a-z]³ vocabulary drops) this
-    shrinks the quadratic pair space by orders of magnitude.
-
-    1. distinct strings per side → token-set key (md5 of the sorted
-       token array) → one REPRESENTATIVE string per set (any string with
-       that set tokenizes identically). The keying is decided and paid
-       PER SIDE: only a side whose sampled strings actually collapse is
-       re-tokenized in full and cached keyed;
-    2. sims over (left set × right set) pairs via the representatives;
-    3. per left set keep ``rank() <= top_n`` by sim DESC (rank, not
-       row_number: boundary ties must survive because the row-level
-       tiebreak crosses sets that share a sim);
-    4. expand kept set pairs → right strings → right rows, take the true
-       row-level top-n per left set (sim DESC, right_id ASC);
-    5. expand to left strings → left rows.
-    """
-    def _distinct_strings(df, col, out_str):
-        return (
-            df.select(F.col(col).alias(out_str))
-            .where(F.col(col).isNotNull())
-            .distinct()
-        )
-
-    def _set_key(out_str):
-        s = F.col(out_str)
-        if apply_word_normalization:
-            s = normalize_string_col(s)
-        return F.md5(F.concat_ws("\x01", F.sort_array(trigram_tokens(s))))
-
-    lstr = cache_registry.track(_distinct_strings(left, left_on, "__ls"))
-    rstr = cache_registry.track(_distinct_strings(right, right_on, "__rs"))
-
-    # ONE cheap scout job decides the whole plan shape before any
-    # quadratic work (every extra driver-blocking job costs ~0.5-1 s of
-    # fixed scheduling latency, which dominates small inputs). Per side
-    # it unions two branches over the cached distinct strings:
-    # * a FULL branch that only counts rows (no tokenization) — this
-    #   materializes the caches and resolves the auto broadcast-vs-
-    #   shuffle choice, so the inner call never needs its own count job;
-    # * a BOUNDED-SAMPLE branch that computes token-set keys to detect
-    #   whether tokenization collapses strings at all. Tokenizing the
-    #   full corpus just to learn "no collapse" was the dominant
-    #   first-run cost on all-unique data; a collapse a 20k-string
-    #   sample misses entirely is rare, and missing it only costs
-    #   speed, never correctness (both paths are exact).
-    def _tagged(df, out_str, side):
-        full = df.select(
-            F.lit(side).alias("__side"),
-            F.lit(0).alias("__samp"),
-            F.lit(None).cast("string").alias("__key"),
-        )
-        samp = df.limit(SET_KEY_SAMPLE_ROWS).select(
-            F.lit(side).alias("__side"),
-            F.lit(1).alias("__samp"),
-            _set_key(out_str).alias("__key"),
-        )
-        return full.unionByName(samp)
-
-    stats = {
-        r["__side"]: r
-        for r in (
-            _tagged(lstr, "__ls", "l")
-            .unionByName(_tagged(rstr, "__rs", "r"))
-            .groupBy("__side")
-            .agg(
-                F.count(F.when(F.col("__samp") == 0, 1)).alias("n"),
-                F.count(F.when(F.col("__samp") == 1, 1)).alias("sn"),
-                F.countDistinct("__key").alias("sk"),  # nulls (full branch) ignored
-            )
-            .collect()
-        )
-    }
-    empty = {"n": 0, "sn": 0, "sk": 0}  # a side with no rows contributes no group
-    lc, rc = stats.get("l", empty), stats.get("r", empty)
-    # PER-SIDE decision (exact either way: set-keying groups one side's
-    # strings by identical token sets, independent of the other side).
-    # A messy corpus joined against an already-clean dimension then pays
-    # the full-corpus key tokenization + keyed cache on the messy side
-    # ONLY — one fewer full pass and one fewer cached frame than the
-    # round-3 both-or-neither switch on such inputs.
-    l_keyed = lc["sk"] < lc["sn"]
-    r_keyed = rc["sk"] < rc["sn"]
-    if strategy == "auto":
-        # Distinct right strings bound the right representatives from
-        # above, so this broadcast decision is safe for both key modes.
-        strategy = "broadcast" if rc["n"] <= BROADCAST_RIGHT_MAX_ROWS else "shuffle"
-
-    if l_keyed:
-        # Collapse confirmed — now the full-corpus keys are worth their
-        # cost. Cached: the keyed frames feed both the representative
-        # pick and the final set→string expansion joins.
-        lstr = cache_registry.track(lstr.withColumn("__key", _set_key("__ls")))
-        lreps = lstr.dropDuplicates(["__key"]).select(F.col("__key").alias("__lkey"), "__ls")
-    else:
-        lreps = lstr.select(F.col("__ls").alias("__lkey"), "__ls")
-    if r_keyed:
-        rstr = cache_registry.track(rstr.withColumn("__key", _set_key("__rs")))
-        rreps = rstr.dropDuplicates(["__key"]).select(F.col("__key").alias("__rkey"), "__rs")
-    else:
-        rreps = rstr.select(F.col("__rs").alias("__rkey"), "__rs")
-
-    smap = similarity_mapping(
-        lreps,
-        rreps,
-        left_on="__ls",
-        right_on="__rs",
-        top_n=top_n,
-        normalization=normalization,
-        apply_word_normalization=apply_word_normalization,
-        strategy=strategy,
-        left_id="__lkey",
-        right_id="__rkey",
-        max_token_df=max_token_df,
-        dedup_keys=False,
-        weighting="tfidf" if _idf is not None else "binary",
-        _rank_ties=True,
-        _idf=_idf,
-    )
-
-    rrows = right.select(F.col(right_id), F.col(right_on).alias("__rs"))
-    if r_keyed:
-        smap = smap.join(rstr.withColumnRenamed("__key", "__rkey"), "__rkey")
-    else:
-        smap = smap.withColumnRenamed("__rkey", "__rs")
-    cand = smap.join(rrows, "__rs").select("__lkey", right_id, "sim")
-    w = Window.partitionBy("__lkey").orderBy(F.desc("sim"), F.asc(right_id))
-    per_set = (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= top_n)
-        .drop("__rn")
-    )
-    lrows = left.select(F.col(left_id), F.col(left_on).alias("__ls"))
-    if l_keyed:
-        per_set = per_set.join(lstr.withColumnRenamed("__key", "__lkey"), "__lkey")
-    else:
-        per_set = per_set.withColumnRenamed("__lkey", "__ls")
-    return per_set.join(lrows, "__ls").select(left_id, right_id, "sim")
+    scored = _scored_pairs(lt, rt, left_id, right_id, **score)
+    # Per-left-row top-n with the deterministic tiebreak (src/cossim.rs:110-133).
+    return _top_n(scored, left_id, [F.desc("sim"), F.asc(right_id)], top_n, F.row_number)
 
 
 def join_sim(
@@ -670,44 +607,29 @@ def join_sim(
         raise ValueError(f"right_id column {right_id!r} not in right frame")
 
     # Cache generated-id frames: monotonically_increasing_id is
-    # plan-position dependent, so the mapping pass and the re-assembly
-    # pass must observe identical ids. Note `left`/`right` here are the
-    # withColumn DERIVATIVES, never the caller's own DataFrame, so a
-    # later cache.unpersist_all() (non-cascading) cannot evict a cache
-    # the application holds on its source frames (cache.py contract).
+    # plan-position dependent, and the plan reads each side twice (key
+    # postings and row expansion), so both reads must observe one set of
+    # ids. Note `left`/`right` here are the withColumn DERIVATIVES, never
+    # the caller's own DataFrame, so a later cache.unpersist_all()
+    # (non-cascading) cannot evict a cache the application holds on its
+    # source frames (cache.py contract).
     if gen_left:
         left = cache_registry.track(left)
     if gen_right:
         right = cache_registry.track(right)
 
+    # Self-join-key collision (left_id == right_id): internal id names
+    # for the plan, undone at the end.
     map_left_id = left_id if left_id != right_id else "__pss_lid"
     map_right_id = right_id if left_id != right_id else "__pss_rid"
-    mapping = similarity_mapping(
-        left.withColumnRenamed(left_id, map_left_id) if map_left_id != left_id else left,
-        right.withColumnRenamed(right_id, map_right_id) if map_right_id != right_id else right,
-        left_on=left_on,
-        right_on=right_on,
-        top_n=top_n,
-        normalization=normalization,
-        apply_word_normalization=apply_word_normalization,
-        strategy=strategy,
-        left_id=map_left_id,
-        right_id=map_right_id,
-        max_token_df=max_token_df,
-        weighting=weighting,
-        idf_corpus=idf_corpus,
-        idf_on=idf_on,
-    )
 
-    # Re-assembly (join.py:143-149): net-inner join of both payloads onto
-    # the mapping. Right-side name collisions get ``suffix`` (Spark has no
-    # join-suffix option, so rename up front). The computed ``sim`` column
-    # is part of the namespace too: a payload column literally named "sim"
-    # (either side) must move out of its way, and a rename target that
-    # already exists keeps gaining the suffix until unique.
-    taken = set(left.columns)
-    if add_similarity:
-        taken.add("sim")
+    # Re-assembly (join.py:143-149): both payloads ride with their rows.
+    # Right-side name collisions get ``suffix`` (Spark has no join-suffix
+    # option, so rename up front). The computed ``sim`` column is part of
+    # the namespace too: a payload column literally named "sim" (either
+    # side) must move out of its way, and a rename target that already
+    # exists keeps gaining the suffix until unique.
+    taken = set(left.columns) | {"sim"}
 
     def _uniquify(name: str, *extra_taken: set[str]) -> str:
         new = f"{name}{suffix}"
@@ -715,8 +637,11 @@ def join_sim(
             new += suffix
         return new
 
-    if add_similarity and "sim" in left.columns and left_id != "sim":
-        left = left.withColumnRenamed("sim", _uniquify("sim", set(right.columns)))
+    lj_on, rj_on = left_on, right_on  # the key columns' names after renaming
+    if "sim" in left.columns and left_id != "sim":
+        new = _uniquify("sim", set(right.columns))
+        left = left.withColumnRenamed("sim", new)
+        lj_on = new if left_on == "sim" else left_on
         taken = set(left.columns) | {"sim"}
     right_renamed = right
     for c in right.columns:
@@ -725,6 +650,7 @@ def join_sim(
         if c in taken:
             new = _uniquify(c, set(right_renamed.columns))
             right_renamed = right_renamed.withColumnRenamed(c, new)
+            rj_on = new if right_on == c else rj_on
             taken.add(new)
 
     lj = left if map_left_id == left_id else left.withColumnRenamed(left_id, map_left_id)
@@ -734,7 +660,39 @@ def join_sim(
         else right_renamed.withColumnRenamed(right_id, map_right_id)
     )
 
-    out = mapping.join(lj, map_left_id, "inner").join(rj, map_right_id, "inner")
+    opts = dict(
+        top_n=top_n,
+        normalization=normalization,
+        apply_word_normalization=apply_word_normalization,
+        strategy=strategy,
+        weighting=weighting,
+        idf_corpus=idf_corpus,
+        idf_on=idf_on,
+    )
+    if strategy == "kernel":
+        # The kernel emits (ids, sim) only: join the payloads back.
+        mapping = similarity_mapping(
+            lj, rj, left_on=lj_on, right_on=rj_on, left_id=map_left_id,
+            right_id=map_right_id, max_token_df=max_token_df, **opts,
+        )
+        out = mapping.join(lj, map_left_id).join(rj, map_right_id)
+    else:
+        # `right` under its own column names: the default idf_on is right_on
+        plan_strategy, idf = _resolve_plan(right, right_on, **opts)
+        out = _keyed_topn(
+            lj,
+            rj,
+            left_on=lj_on,
+            right_on=rj_on,
+            left_id=map_left_id,
+            right_id=map_right_id,
+            top_n=top_n,
+            apply_word_normalization=apply_word_normalization,
+            normalization=normalization,
+            strategy=plan_strategy,
+            max_token_df=max_token_df,
+            idf=idf,
+        )
 
     # Column-set semantics of add_mapping/add_similarity (join.py:147-148).
     left_payload = [c for c in lj.columns if c != map_left_id]

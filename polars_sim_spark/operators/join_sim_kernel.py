@@ -40,7 +40,8 @@ VOCAB_SIZE = 26 * 26 * 26
 #: The kernel path collects the whole right side onto the driver (the
 #: reference's in-memory regime). Above this bound it fails fast with a
 #: clear error instead of OOMing the driver. This is a MEMORY bound, not
-#: a perf crossover (unlike join_sim's measured BROADCAST_RIGHT_MAX_ROWS):
+#: a perf crossover (join_sim's ``strategy="auto"`` compares the right
+#: side's size estimate with the session's autoBroadcastJoinThreshold):
 #: 2M rows of postings ≈ low hundreds of MB, safe for a typical driver.
 KERNEL_RIGHT_MAX_ROWS = 2_000_000
 
@@ -61,8 +62,7 @@ def build_right_index(
 
     # Bound check only needs "> cap or not" — a column-pruned LIMIT
     # cap+1 count short-circuits after cap+1 rows instead of scanning
-    # the full right side (same pattern as join_sim's auto-strategy
-    # scout).
+    # the full right side.
     bounded = right.select(right_id).limit(KERNEL_RIGHT_MAX_ROWS + 1).count()
     if bounded > KERNEL_RIGHT_MAX_ROWS:
         raise ValueError(

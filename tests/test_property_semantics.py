@@ -6,8 +6,9 @@ The 7 golden tests pin hand-computed values; hypothesis hunts the edge
 semantics — digits/punctuation/uppercase dropped from the [a-z]³
 vocabulary, <3-char strings vectorizing to zero, word normalization
 unlocking matches, count vs l2 — on inputs nobody thought to write down.
-Each example runs one tiny broadcast-strategy Spark job, so examples are
-few but adversarially shrunk.
+Each example runs one tiny Spark job per strategy, so examples are few
+but adversarially shrunk; a drawn ``top_n`` of 1 or 2 over strings that
+share trigram sets checks the row-level (sim DESC, rid ASC) tiebreak.
 """
 
 from __future__ import annotations
@@ -34,37 +35,64 @@ def model_tokens(s: str, normalize: bool) -> frozenset[str]:
     )
 
 
-def model_mapping(lefts, rights, normalization, normalize_words):
+def model_mapping(lefts, rights, normalization, normalize_words, top_n=None):
+    """{(li, ri): sim}, at most ``top_n`` per left row by (sim DESC, ri
+    ASC). The l2 sim uses the engine's float expression
+    k / (√|T(x)|·√|T(y)|), so equal sims tie exactly as in Spark."""
     out = {}
     for li, ls in enumerate(lefts):
         lt = model_tokens(ls, normalize_words)
+        row = []
         for ri, rs in enumerate(rights):
             rt = model_tokens(rs, normalize_words)
             k = len(lt & rt)
             if k == 0:
                 continue
-            sim = k if normalization == "count" else k / math.sqrt(len(lt) * len(rt))
-            out[(li, ri)] = sim
+            sim = float(k) if normalization == "count" else k / (
+                math.sqrt(len(lt)) * math.sqrt(len(rt))
+            )
+            row.append((-sim, ri))
+        row.sort()
+        for neg_sim, ri in row[:top_n]:
+            out[(li, ri)] = -neg_sim
     return out
 
 
+# A few words, variants of them that tokenize to the SAME trigram set
+# (digits, punctuation, uppercase and repeats fall outside the [a-z]³
+# vocabulary) and near relatives, so the set-keyed plan's rank-tie
+# expansion meets real ties.
+COLLAPSING = [
+    "abcde", "abcde!", "1abcde", "abcdeXY", "ab cde", "bcdefg", "bcdefg2",
+    "gfedcba", "cab", "cab-cab", "Cab.cab",
+]
+
 strings = st.lists(
-    st.text(alphabet=ALPHABET, min_size=0, max_size=10), min_size=1, max_size=8
+    st.sampled_from(COLLAPSING) | st.text(alphabet=ALPHABET, min_size=0, max_size=10),
+    min_size=1,
+    max_size=8,
 )
 
 
 @pytest.mark.parametrize(
-    "normalization,normalize_words",
-    [("l2", False), ("count", False), ("l2", True)],
+    "normalization,normalize_words,strategy",
+    [
+        pytest.param("l2", False, "broadcast", id="l2-False"),
+        pytest.param("count", False, "broadcast", id="count-False"),
+        pytest.param("l2", True, "broadcast", id="l2-True"),
+        pytest.param("l2", False, "auto", id="l2-False-auto"),
+        pytest.param("l2", False, "shuffle", id="l2-False-shuffle"),
+        pytest.param("count", True, "shuffle", id="count-True-shuffle"),
+    ],
 )
-@given(lefts=strings, rights=strings)
+@given(lefts=strings, rights=strings, top_n=st.sampled_from([1, 2, None]))
 @settings(
     max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_mapping_matches_python_model(
-    spark, lefts, rights, normalization, normalize_words
+    spark, lefts, rights, top_n, normalization, normalize_words, strategy
 ):
     ldf = spark.createDataFrame(
         [(i, s) for i, s in enumerate(lefts)], "lid long, ls string"
@@ -79,16 +107,17 @@ def test_mapping_matches_python_model(
             rdf,
             left_on="ls",
             right_on="rs",
-            top_n=len(rights) + 1,  # keep every match: no tie ambiguity
+            # None keeps every match; a small top_n checks the tiebreak
+            top_n=top_n or len(rights) + 1,
             normalization=normalization,
             apply_word_normalization=normalize_words,
-            strategy="broadcast",
+            strategy=strategy,
             left_id="lid",
             right_id="rid",
         ).collect()
     }
-    expected = model_mapping(lefts, rights, normalization, normalize_words)
-    assert set(got) == set(expected)
+    expected = model_mapping(lefts, rights, normalization, normalize_words, top_n)
+    assert set(got) == set(expected), (lefts, rights, top_n)
     for pair, sim in expected.items():
         assert got[pair] == pytest.approx(sim, abs=1e-9), (pair, lefts, rights)
 

@@ -1,15 +1,18 @@
-"""Measure the broadcast-vs-shuffle crossover of the similarity join.
+"""Measure the broadcast-vs-shuffle crossover of the similarity join,
+and whether ``strategy="auto"`` picks the winner.
 
-Purpose: the auto-strategy cutoff ``BROADCAST_RIGHT_MAX_ROWS``
-(operators/join_sim.py) must be a MEASURED constant, not an assumed one.
-This sweep fixes the probe (left) side at 5k rows and grows the right
-side, timing both physical strategies on synthetic near-unique strings
-(4 pseudo-random 7-letter words per row — realistic fuzzy-join overlap:
-most pairs share few trigrams).
+``auto`` is decided at plan time: broadcast when the optimizer's size
+estimate of the right input is within the session's
+``spark.sql.autoBroadcastJoinThreshold`` (operators/join_sim.py). This
+sweep fixes the probe (left) side at 5k rows and grows the right side,
+timing all three strategies through the default set-keyed plan on
+synthetic near-unique strings (4 pseudo-random 7-letter words per row —
+realistic fuzzy-join overlap: most pairs share few trigrams).
 
 Run:  python tools/bench_crossover.py [right_sizes...]
-Prints one line per (right_size, strategy) and a summary; results are
-recorded in BASELINE.md.
+Prints one line per (right_size, strategy), with the right side's size
+estimate and the threshold, and a summary; results are recorded in
+BASELINE.md.
 """
 
 from __future__ import annotations
@@ -56,7 +59,6 @@ def run(spark, n_left: int, n_right: int, strategy: str) -> float:
         strategy=strategy,
         left_id="l_id",
         right_id="r_id",
-        dedup_keys=False,
     )
     n = out.count()
     dt = time.time() - t0
@@ -68,20 +70,33 @@ def run(spark, n_left: int, n_right: int, strategy: str) -> float:
 
 
 def main() -> None:
-    sizes = [int(s) for s in sys.argv[1:]] or [250_000, 1_000_000, 2_000_000]
+    sizes = [int(s) for s in sys.argv[1:]] or [100_000, 250_000, 1_000_000]
     spark = pss.get_spark("bench-crossover", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     n_left = 5_000
+    threshold = int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
     results = {}
     run(spark, 1_000, 1_000, "broadcast")  # JIT/codegen warmup
     for n_right in sizes:
-        for strategy in ("broadcast", "shuffle"):
-            results[(n_right, strategy)] = run(spark, n_left, n_right, strategy)
+        right = synth_strings(spark, n_right, seed=1)
+        est = int(right._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        print(f"right={n_right:>9,} size estimate {est:,} B, threshold {threshold:,} B", flush=True)
+        # broadcast last: past the broadcast regime it can exhaust the
+        # driver heap, which ends the session
+        for strategy in ("shuffle", "auto", "broadcast"):
+            try:
+                results[(n_right, strategy)] = run(spark, n_left, n_right, strategy)
+            except Exception as e:  # recorded as a failed strategy
+                print(f"right={n_right:>9,} strategy={strategy:<9} FAILED {type(e).__name__}")
+                results[(n_right, strategy)] = float("inf")
     print("\nsummary (left=5k):")
     for n_right in sizes:
-        b, s = results[(n_right, "broadcast")], results[(n_right, "shuffle")]
-        winner = "broadcast" if b < s else "shuffle"
-        print(f"  right={n_right:>9,}: broadcast {b:6.2f}s  shuffle {s:6.2f}s  -> {winner}")
+        b, s, a = (results.get((n_right, k), float("inf")) for k in ("broadcast", "shuffle", "auto"))
+        best = min(b, s)
+        print(
+            f"  right={n_right:>9,}: broadcast {b:6.2f}s  shuffle {s:6.2f}s  auto {a:6.2f}s"
+            f"  -> auto/best {a / best:4.2f}"
+        )
 
 
 if __name__ == "__main__":
